@@ -12,7 +12,8 @@ object BaselineOnly {
     val reps = if (args.nonEmpty) args(0).toInt else 3
     val dim = if (args.length > 1) args(1).toInt else BaselineWorkload.DIM
     val k = if (args.length > 2) args(2).toInt else BaselineWorkload.K
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft-baseline-only")

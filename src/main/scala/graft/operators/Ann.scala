@@ -814,7 +814,8 @@ object Ann {
     * (each entry is ≤ ~2048·m rows — sample-sized, not corpus-sized). */
   /** Serializes every set/restore scope of the session-global
     * ObjectHashAggregate fallback-threshold conf (here, the approx
-    * build, and Similarity's probe assignment): two threads sharing
+    * build — which also scopes AQE off under it — and Similarity's
+    * probe assignment): two threads sharing
     * one SparkSession could otherwise interleave captures and restores
     * so the LAST restore resurrects the other scope's raise — leaking
     * a 4M threshold to later KB-buffer aggregates (an OOM hazard) or
@@ -1291,61 +1292,22 @@ object Ann {
   private def hnswEdgesApproxWith(s: SparkSession, d: String, m: Int,
       nProj: Int, w: Double, probe: Int, cap: Int, refine: Int,
       scoredMassCeiling: Long,
-      view: DataFrame => DataFrame): DataFrame = {
-    // TopMEdges plans as ObjectHashAggregate, whose sort-based
-    // fallback triggers after 128 DISTINCT KEYS per task (a default
-    // tuned for sketch-sized buffers like percentile_approx) — this
-    // build has ~n×levels keys per map task, so at the default every
-    // task abandoned hashing immediately and externally SORTED its
-    // whole candidate-multiset slice (measured 2.2× the build at sf1:
-    // 30 s → 13.5 s steady-state). A TopMEdges buffer is a bounded
-    // m-entry heap (~300 B at m=16), so holding every key's buffer is
-    // ~n×levels×300B ≈ 60 MB per task at sf1 — raise the threshold so
-    // the map-side reduction actually runs as a hash aggregate. The
-    // raise is memory-DERIVED, not a constant ([[topMFallbackThreshold]]):
-    // the 2M-vector fixture found the constant's other edge — see
-    // that method's doc for the stage-85 heap death it replaces.
-    // ObjectHashAggregateExec reads the threshold from the ACTIVE
-    // session conf inside doExecute (verified against the Spark 4.1.2
-    // bytecode), so a lazily-returned plan cannot scope it: the build
-    // MATERIALIZES EAGERLY here (one localCheckpoint of the
+      view: DataFrame => DataFrame): DataFrame = withBuildConf(s) {
+    // ObjectHashAggregateExec reads the fallback threshold from the
+    // ACTIVE session conf inside doExecute (verified against the Spark
+    // 4.1.2 bytecode), so a lazily-returned plan cannot scope it: the
+    // build MATERIALIZES EAGERLY here (one localCheckpoint of the
     // output-sized edge table — the NND rounds already checkpoint
-    // tables of the same size) and the previous threshold is restored
-    // in the finally, so later aggregates in the same session (e.g. a
-    // sketch-typed UDAF whose per-key buffers are KB, where 4M keys
-    // would be an OOM) see their own conf, never this build's raise.
-    // The eager boundary is also what makes the intermediate state
-    // freeable: the bucket-stage cache and the per-round NND
-    // checkpoints unpersist on the way out, so repeated builds in one
-    // session leave only their result checkpoint (pinned in AnnSpec).
-    fallbackThresholdScope.synchronized {
-    val thresholdKey =
-      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
-    val prevThreshold = s.conf.getOption(thresholdKey)
-    s.conf.set(thresholdKey, topMFallbackThreshold(
-      Runtime.getRuntime.maxMemory,
-      s.sparkContext.defaultParallelism).toString)
-    // AQE stays ON through the build (r15). r14 had scoped it off
-    // wholesale to dodge a SortMergeJoin crash at the 10× sf1 point —
-    // the finger-seed join's two sides finalized under AQE with
-    // DIFFERENT partition counts and the join died constructing its
-    // output PartitioningCollection ("requires all of its
-    // partitionings have the same numPartitions"). The root cause is
-    // fixed at the join itself: both sides are now explicitly
-    // repartitioned to the SAME data-derived shard count (see the
-    // finger-seed block in [[hnswEdgesApproxPlan]]), which AQE leaves
-    // alone (user-specified partition counts are never coalesced), so
-    // the mismatch cannot arise and the rest of the build keeps AQE's
-    // small-partition coalescing and skew handling — the r14 scoping
-    // had also removed ~20 stages' worth of adaptive right-sizing at
-    // the bench SFs (8-core beat 32-core on this query, the VERDICT
-    // r14 scaling block).
-    // the plan call itself runs eager jobs (measuredKeyDims,
-    // sampledExactPairs, measuredCapture, escalated NND rounds), so it
-    // sits INSIDE the try: a failure mid-build must still restore the
-    // conf and free whatever state was registered up to the throw —
-    // the plan registers each cache/checkpoint into `track` the moment
-    // it creates it, not on return.
+    // tables of the same size). The eager boundary is also what makes
+    // the intermediate state freeable: the bucket-stage cache and the
+    // per-round NND checkpoints unpersist on the way out, so repeated
+    // builds in one session leave only their result checkpoint (pinned
+    // in AnnSpec). The plan call itself runs eager jobs
+    // (measuredKeyDims, sampledExactPairs, measuredCapture, escalated
+    // NND rounds), so it sits INSIDE the try: a failure mid-build must
+    // still free whatever state was registered up to the throw — the
+    // plan registers each cache/checkpoint into `track` the moment it
+    // creates it, not on return.
     val track = scala.collection.mutable.ListBuffer.empty[DataFrame]
     try {
       val wide =
@@ -1354,17 +1316,50 @@ object Ann {
       // the view (diversity selection or plain slice) pipelines
       // straight onto the wide final TopMEdges stage (same-keys
       // window / collect_list — no extra exchange), so ONE eager
-      // checkpoint materializes build + view inside the threshold scope
+      // checkpoint materializes build + view inside the conf scope
       approxFinalRank(view(wide).localCheckpoint(true))
-    } finally {
-      prevThreshold match {
-        case Some(v) => s.conf.set(thresholdKey, v)
-        case None    => s.conf.unset(thresholdKey)
-      }
-      track.foreach(freeBuildState)
-    }
-    }
+    } finally track.foreach(freeBuildState)
   }
+
+  /** The session conf every eager part of the approximate build runs
+    * under, restored in the finally so later queries in the same
+    * session see their own conf.
+    *
+    * The TopM fallback threshold: TopMEdges plans as
+    * ObjectHashAggregate, whose sort-based fallback triggers after 128
+    * DISTINCT KEYS per task (a default tuned for sketch-sized buffers
+    * like percentile_approx) — this build has ~n×levels keys per map
+    * task, so at the default every task abandoned hashing and
+    * externally SORTED its whole candidate-multiset slice (measured
+    * 2.2× the build at sf1: 30 s → 13.5 s steady-state). The raise is
+    * memory-derived ([[topMFallbackThreshold]]); restoring it matters
+    * because a sketch-typed UDAF with KB buffers would OOM at 4M keys.
+    *
+    * AQE off: under AQE the two sides of the build's shuffled joins
+    * that feed a Union can finalize with different partition counts,
+    * and physical planning dies with "PartitioningCollection requires
+    * all of its partitionings have the same numPartitions". Measured
+    * with AQE on: sf1 crashed (disabling only partition coalescing did
+    * not clear it); pinning both join sides to one explicit count
+    * still crashed at sf0.001 and sf0.1 whenever shuffle partitions
+    * was 8; without the pins, kd30k crashed at local[4]/4 and
+    * local[8]/8. With AQE off every one of those configurations
+    * completes, with identical rows. */
+  private def withBuildConf[T](s: SparkSession)(body: => T): T =
+    fallbackThresholdScope.synchronized {
+      val scoped = Seq(
+        "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" ->
+          topMFallbackThreshold(Runtime.getRuntime.maxMemory,
+            s.sparkContext.defaultParallelism).toString,
+        "spark.sql.adaptive.enabled" -> "false")
+      val prev = scoped.map { case (k, _) => k -> s.conf.getOption(k) }
+      scoped.foreach { case (k, v) => s.conf.set(k, v) }
+      try body
+      finally prev.foreach {
+        case (k, Some(v)) => s.conf.set(k, v)
+        case (k, None)    => s.conf.unset(k)
+      }
+    }
 
   /** Final presentation of the refined edge table: per-(level, src)
     * rank in (dist, dst) order — runs AFTER the eager build boundary,
@@ -1376,17 +1371,19 @@ object Ann {
       .orderBy(col("level"), col("src"), col("rnk"))
 
   /** Audit surface for PlanSpec: the identical build lineage the eager
-    * wrapper executes, returned LAZILY — no conf mutation, no
-    * checkpoint — so the plan audit sees every stage a regression
-    * could land in. */
+    * wrapper executes, returned LAZILY — no final checkpoint — so the
+    * plan audit sees every stage a regression could land in. Plan
+    * construction still runs eager jobs (the count, keyDims, the NND
+    * round checkpoints), so it runs under [[withBuildConf]] too. */
   private[graft] def hnswEdgesApproxForAudit(s: SparkSession, d: String,
       m: Int = 16, nProj: Int = DefaultNProj, w: Double = DefaultKeyW,
       probe: Int = DefaultProbe,
       cap: Int = DefaultCap, refine: Int = 2): DataFrame =
     approxFinalRank(diversityView(s,
       d,
-      hnswEdgesApproxPlan(s, d, m, nProj, w, probe, cap, refine,
-        scala.collection.mutable.ListBuffer.empty[DataFrame], audit = true),
+      withBuildConf(s)(hnswEdgesApproxPlan(s, d, m, nProj, w, probe, cap,
+        refine, scala.collection.mutable.ListBuffer.empty[DataFrame],
+        audit = true)),
       m))
 
   /** Frees one piece of build state: a cached DataFrame, or the
@@ -1400,37 +1397,6 @@ object Ann {
         lr.rdd.unpersist(false)
       case _ => df.unpersist(false)
     }
-
-  /** Data-derived shard count for the build's EXPLICIT repartitions —
-    * the scale-adaptive replacement for the r14 constant
-    * `defaultParallelism` target (the [[graft.streaming.StreamingOps]]
-    * feed-shard pattern): enough partitions that each holds ~32 MB of
-    * the given rows, floored at 8 so small corpora still spread off a
-    * 1–2-split scan, capped by the session's parallelism — the cap is
-    * what binds at warehouse scale, so nothing here assumes local[32].
-    * At the bench SFs this turns 32 tiny tasks per explicit exchange
-    * into 8 (sf0.1's whole build state is ~KBs–MBs), which is where the
-    * measured 8-core-beats-32-core inversion on this query lived. */
-  private def buildShards(s: SparkSession, rows: Long,
-      bytesPerRow: Long): Int = {
-    val bytes = math.max(1L, rows) * bytesPerRow
-    val byVolume = math.ceil(bytes.toDouble / (32L << 20)).toLong
-    math.max(8L, math.min(s.sparkContext.defaultParallelism.toLong, byVolume))
-      .toInt
-  }
-
-  /** Shard count for the build's COMPUTE-BOUND join stages (candidate
-    * scoring, NND co-neighbor scoring), derived from the ESTIMATED
-    * distance-fold count rather than bytes: these stages carry slim id
-    * rows but evaluate a 64-wide fold per candidate pair, so byte-based
-    * sizing (AQE's coalescing included) serializes exactly the stages
-    * that need cores — the measured r14 pathology behind the
-    * 8-core-beats-32 inversion. ~512k folds per shard keeps local
-    * shards ≥ a few hundred ms of real work; the parallelism cap binds
-    * at warehouse scale (the session knob stays authoritative). */
-  private def foldShards(s: SparkSession, pairsEst: Double): Int =
-    math.max(8L, math.min(s.sparkContext.defaultParallelism.toLong,
-      math.ceil(pairsEst / 512000.0).toLong)).toInt
 
   /** The build plan of [[hnswEdgesApprox]] (everything up to the
     * final rank). Every intermediate frame the caller must free after
@@ -1508,10 +1474,7 @@ object Ann {
         bucketCols.map(bc => col(s"pb.$bc").as(bc)): _*)
       .withColumn("rn", row_number().over(wb)).filter(col("rn") <= cap)
       .drop("rn")
-      // explicit spread of the capped bucket rows (vector payload rides
-      // along — ~550 B/row × nProj copies): shard count derives from
-      // that volume, not the session's core count ([[buildShards]])
-      .repartition(buildShards(s, cnt * nProj, 560L), col("vec_id"))
+      .repartition(col("vec_id"))
       .cache()
     track += bve
     // the payload re-attach: one broadcast of the corpus serves every
@@ -1545,26 +1508,8 @@ object Ann {
     // often. Bit-identical distances: (x−y)² = (y−x)² term by term and
     // the fold visits the same index order, so the (dist, id) heaps
     // and the DISTINCT-formulated oracle are untouched.
-    //
-    // BOTH join sides are explicitly repartitioned on the join key to
-    // the SAME pinned, fold-count-derived shard count ([[foldShards]]):
-    // (1) under AQE the two sides of a shuffled join can finalize with
-    // different partition counts, and any SMJ under a Union crashes
-    // constructing its PartitioningCollection when the union's
-    // doExecute asks for output partitioning (the r14 sf1 crash — the
-    // candidate joins feed exactly such unions); a user-specified
-    // count is never AQE-coalesced, so the sides stay equal by
-    // construction. (2) The scoring stage is compute-bound on slim
-    // rows, so AQE's byte-based coalescing would serialize it — the
-    // pinned count sizes it by estimated distance folds instead. The
-    // exchange count is unchanged (the join required these shuffles
-    // anyway); only their partition count is pinned.
-    val candShards = foldShards(s, cnt.toDouble * nProj *
-      math.pow(2 * probe + 1, keyDims) * cap / 2)
-    val keyJoinCols = ("proj_id" +: bucketCols).map(col)
     val half = attach(
-      bve.repartition(candShards, keyJoinCols: _*).as("l")
-        .join(probed.repartition(candShards, keyJoinCols: _*).as("r"),
+      bve.as("l").join(probed.as("r"),
           keyEq && col("l.vec_id") < col("r.vec_id"))
         .select(col("l.vec_id").as("a"), col("l.embedding").as("lv"),
           col("r.vec_id").as("b"),
@@ -1621,27 +1566,14 @@ object Ann {
     val ranks = intra.join(broadcast(offs), "bkt")
       .select(col("vec_id"), (col("boff") + col("ir")).as("r"))
     // finger pairs move (id, level, rank) only — n·fingers slim rows
-    // through the rank equi-join, payloads re-attached map-side.
-    // BOTH sides of the rank equi-join are explicitly repartitioned to
-    // the SAME data-derived shard count: under AQE the two sides of
-    // this join could finalize with different partition counts and the
-    // SortMergeJoin crashed constructing its PartitioningCollection
-    // (r14's sf1 "requires all of its partitionings have the same
-    // numPartitions" — r14 scoped AQE off wholesale to dodge it). A
-    // user-specified partition count is never AQE-coalesced, so the
-    // sides stay aligned by construction, the join plans with zero
-    // extra exchanges (each side already hash-partitioned on its key),
-    // and AQE stays ON for the rest of the build.
-    val fingerShards = buildShards(s, cnt * (fingers + 1L), 48L)
+    // through the rank equi-join, payloads re-attached map-side
     val er = e.select(col("vec_id"), col("level")).join(ranks, "vec_id")
     val fj = er.select(col("vec_id"), col("level"), col("r"),
         explode(sequence(lit(0), lit(fingers - 1))).as("j"))
       .withColumn("pr", expr(s"(r + shiftleft(1L, j)) % ${math.max(cnt, 1L)}"))
-      .repartition(fingerShards, col("pr"))
-    val erByRank = er.repartition(fingerShards, col("r"))
     val fingerScored = attach(attach(
       fj.as("l")
-        .join(erByRank.as("r2"), col("l.pr") === col("r2.r"))
+        .join(er.as("r2"), col("l.pr") === col("r2.r"))
         .filter(col("l.vec_id") =!= col("r2.vec_id"))
         .select(col("l.vec_id").as("src"), col("r2.vec_id").as("dst"),
           least(col("l.level"), col("r2.level"), lit(MaxLevel)).as("minl")),
@@ -1755,16 +1687,8 @@ object Ann {
       // shuffle sides, ~76 GB at the 2M-vector fixture. The n·(2m)²
       // candidate stream never shuffles at all: self-join → attach ×2
       // → score → partial TopMEdges heap is one map stage.
-      // the self-join's sides are ONE explicitly repartitioned frame
-      // with a pinned, fold-count-derived shard count — same two
-      // reasons as the bucket candidate join above: equal-count sides
-      // under AQE (this SMJ feeds topM's union — the exact site of the
-      // r14 sf1 PartitioningCollection crash), and fold-derived (not
-      // byte-derived) parallelism for the n·(2m)² scoring stage
-      val nbShards = foldShards(s, 2.0 * cnt * (2 * m) * (2 * m))
       val nb = baseM.select(col("level"), col("src"), col("dst"))
         .unionByName(revCapped.select(col("level"), col("src"), col("dst")))
-        .repartition(nbShards, col("level"), col("src"))
       // co-neighbor proposals are symmetric (u,v share a hub s in
       // either order), so score each unordered pair once (join on <)
       // and mirror the directed rows in the same map stage — half the

@@ -774,17 +774,19 @@ class AnnSpec extends AnyFunSuite {
   }
 
   test("hnsw_edges_approx: conf restored and intermediate state freed after the eager build") {
-    val key = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
-    // pre-set a sentinel so the restore path through an existing value
+    // pre-set sentinels so the restore path through an existing value
     // is the one exercised (the unset path is the same finally block)
-    val sentinel = "4096"
-    spark.conf.set(key, sentinel)
+    val sentinels = Map(
+      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "4096",
+      "spark.sql.adaptive.enabled" -> "true")
+    sentinels.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
       val before = spark.sparkContext.getPersistentRDDs.size
       val r1 = Ann.hnswEdgesApprox(spark, d)
       assert(r1.count() > 0)
-      assert(spark.conf.get(key) == sentinel,
-        "fallback-threshold raise leaked out of the build")
+      sentinels.foreach { case (k, v) =>
+        assert(spark.conf.get(k) == v, s"the build's $k leaked out of the build")
+      }
       val after1 = spark.sparkContext.getPersistentRDDs.size
       // each build may leave exactly ONE persisted artifact — its
       // result checkpoint (caller-owned); the bucket-stage cache and
@@ -797,7 +799,37 @@ class AnnSpec extends AnyFunSuite {
       val after2 = spark.sparkContext.getPersistentRDDs.size
       assert(after2 - after1 <= 1,
         s"repeated builds accumulate storage: $after1 -> $after2 persistent RDDs")
-    } finally spark.conf.unset(key)
+    } finally sentinels.keys.foreach(spark.conf.unset)
+  }
+
+  test("hnsw_edges_approx: identical rows across shuffle partitions x AQE; confs restored") {
+    // the build must neither crash nor change its answer with the
+    // execution configuration; 8 partitions with AQE on is the shape
+    // that used to fail at physical planning
+    val partsKey = "spark.sql.shuffle.partitions"
+    val aqeKey = "spark.sql.adaptive.enabled"
+    val prior = Seq(partsKey, aqeKey).map(k => k -> spark.conf.getOption(k))
+    try {
+      val runs = for (parts <- Seq("7", "8"); aqe <- Seq("true", "false")) yield {
+        spark.conf.set(partsKey, parts)
+        spark.conf.set(aqeKey, aqe)
+        val rows = Ann.hnswEdgesApprox(spark, d)
+          .select("level", "src", "dst", "dist")
+          .orderBy("level", "src", "dst").collect().toSeq
+        assert(spark.conf.get(partsKey) == parts && spark.conf.get(aqeKey) == aqe,
+          s"build did not restore the session conf (partitions=$parts, aqe=$aqe)")
+        s"partitions=$parts aqe=$aqe" -> rows
+      }
+      val (refName, ref) = runs.head
+      assert(ref.nonEmpty)
+      runs.tail.foreach { case (name, rows) =>
+        assert(rows == ref, s"rows under $name differ from $refName")
+      }
+      info(s"${ref.size} edges, identical under ${runs.map(_._1).mkString("; ")}")
+    } finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
   }
 
   test("ann_ivfpq: composed index keeps useful recall; self reachable through own cell") {
